@@ -10,8 +10,8 @@ approximation):
 repeated until no label changes. Each iteration is one join + one
 aggregation (shuffle by vertex); convergence takes O(diameter)
 iterations — near-dup clusters are tiny and star-shaped, so 2-4
-rounds in practice. ``localCheckpoint`` truncates the growing lineage
-each round (without it, iteration k re-executes all k-1 prior joins
+rounds in practice. A pin (``operators.pin``) truncates the growing
+lineage each round (without it, iteration k re-executes all k-1 prior joins
 and the driver eventually OOMs planning the plan tree — the classic
 iterative-Spark failure at scale).
 
@@ -24,37 +24,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pin import pin
+
 
 def connected_components(pairs: DataFrame,
                          src: str = "id_1", dst: str = "id_2",
-                         max_iterations: int = 20,
-                         checkpoint_dir: str | None = None) -> DataFrame:
+                         max_iterations: int = 20) -> DataFrame:
     """Cluster ids from an undirected edge list.
 
     Returns (id, cluster_id) where cluster_id is the minimum vertex id
     reachable from ``id``; isolated vertices are not emitted (callers
-    left-join and coalesce to self). Deterministic for any input.
-
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    reliable ``checkpoint()`` into that directory — on a real cluster
-    an executor loss then recovers from storage instead of killing the
-    loop's lineage (same durability flag as operators/graph.pagerank);
-    when None, executor-local ``localCheckpoint`` (local mode)."""
-    spark_ = pairs.sparkSession
-    if checkpoint_dir is not None:
-        spark_.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def cp(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint()
-        return df.localCheckpoint()
-
+    left-join and coalesce to self). Deterministic for any input."""
     edges = (pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
              .unionByName(
                  pairs.select(F.col(dst).alias("a"),
                               F.col(src).alias("b")))
              .distinct())
-    edges = cp(edges)
+    edges = pin(edges, "connected_components.edges")
     # candidate-pair graphs are usually far smaller than the corpus:
     # right-size the iteration's shuffle width so per-round fixed cost
     # doesn't dominate (AQE coalesces stage-by-stage, but the loop's
@@ -72,7 +58,7 @@ def connected_components(pairs: DataFrame,
               .agg(F.least(F.min("b"), F.first("a")).alias("label"))
               .select(F.col("a").alias("id"), "label"))
 
-    for _ in range(max_iterations):
+    for i in range(max_iterations):
         # propagate: my new label = min(my label, labels of neighbors)
         neighbor_labels = (edges
                            .join(labels, edges.b == labels.id)
@@ -81,7 +67,7 @@ def connected_components(pairs: DataFrame,
         new_labels = (labels.unionByName(neighbor_labels)
                       .groupBy("id")
                       .agg(F.min("label").alias("label")))
-        new_labels = cp(new_labels)
+        new_labels = pin(new_labels, f"connected_components.round{i + 1}")
         changed = (new_labels.alias("n")
                    .join(labels.alias("o"), "id")
                    .filter(F.col("n.label") != F.col("o.label"))

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.exprs import let_bind
+from .pin import pin
 
 # Mersenne prime 2^31-1: permutation arithmetic a*h+b stays < 2^62,
 # safely inside BIGINT.
@@ -168,9 +169,9 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
               .withColumn("_sh", word_shingle_hashes(F.col("_txt")))
               .withColumn("_sig", _minhash_sig_udf(k)(F.col("_sh")))
               .drop("_txt"))
-    # materialize once (lineage truncated; blocks GC'd with the plan)
-    # so the four downstream branches don't recompute the signatures
-    base = base.localCheckpoint(eager=True)
+    # pin once so the four downstream branches don't recompute the
+    # signatures
+    base = pin(base, "minhash_candidate_pairs.signatures")
 
     band_structs = F.array(*[
         F.struct(F.lit(j).alias("band"),
@@ -267,7 +268,7 @@ def simhash_candidate_pairs(df: DataFrame, text_col: str = "text",
               .withColumn("_sh", F.expr(
                   _SIMHASH_ASSEMBLE_SQL.format(counts="`_cnt`")))
               .select("_id", "_sh"))
-    base = base.localCheckpoint(eager=True)
+    base = pin(base, "simhash_candidate_pairs.fingerprints")
     band_structs = F.array(*[
         F.struct(F.lit(j).alias("band"),
                  F.shiftrightunsigned("_sh", j * 16)
@@ -302,18 +303,16 @@ def gram_set(df: DataFrame, text_col: str = "text",
     mirrors the SQL oracle — unlike MinHash, which keeps a
     truncated-shingle fallback).
 
-    The exploded-distinct set is materialized once (executor-local
-    checkpoint; prefer persist/reliable checkpoint on a real
-    cluster): every caller fans it out to 2-3 branches (join sides +
-    per-doc counts) and the shingle explode + distinct shuffle would
-    otherwise re-run per branch."""
+    The exploded-distinct set is pinned once: every caller fans it
+    out to 2-3 branches (join sides + per-doc counts) and the shingle
+    explode + distinct shuffle would otherwise re-run per branch."""
     tri = (df.filter(F.size(F.split(F.col(text_col), r"\s+")) >= n)
              .select(F.col(id_col).alias("_id"),
                      F.col(block_col).alias("_blk"),
                      F.explode(word_shingles(F.col(text_col), n))
                       .alias("_g"))
              .distinct())
-    return tri.localCheckpoint(eager=False)
+    return pin(tri, "gram_set")
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",

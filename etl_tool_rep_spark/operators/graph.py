@@ -3,23 +3,15 @@
 Each iteration is two joins + one aggregation, all keyed by vertex —
 the canonical iterative-Spark shape (same discipline as
 ``cluster.connected_components``): lineage truncated per round by a
-checkpoint, convergence measured by max rank delta.
-
-Durability: ``localCheckpoint`` keeps blocks on executors only — fine
-for local[*] and tests, but on a real cluster a lost executor kills
-the lineage with no recompute path. Pass ``checkpoint_dir`` to switch
-every round to a RELIABLE ``checkpoint()`` (HDFS/object-store backed)
-— the 100-TB setting. The flag changes durability only, not results.
+pin (``operators.pin``), convergence measured by max rank delta.
 
 Dangling-node mass (vertices with no out-edges) is folded back
 uniformly each round, so ranks always sum to 1 — the original
 Brin/Page formulation. Because mass is conserved, the dangling mass
 equals 1 - sum(inflow), so it stays IN-PLAN as a broadcast 1-row
 aggregate instead of a per-round driver collect. The convergence
-delta rides the SAME job as the rank refresh: the new frame carries
-the previous rank as a column, the round's checkpoint is lazy, and
-the max-|delta| aggregate is the action that materializes it — a
-probe round costs one job, not a checkpoint job plus a join job.
+delta needs no join: the pinned round carries the previous rank as a
+column, so the max-|delta| probe is one aggregate over the pin.
 """
 
 from __future__ import annotations
@@ -27,18 +19,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pin import pin
+
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              damping: float = 0.85, max_iterations: int = 30,
-             tol: float = 1e-7,
-             checkpoint_dir: str | None = None) -> DataFrame:
+             tol: float = 1e-7) -> DataFrame:
     """PageRank over a directed edge list; returns (id, rank) with
     ranks summing to 1. Undirected graphs: pass each edge in both
     directions. Deterministic up to float summation order.
-
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    reliable ``checkpoint()`` into that directory (cluster-durable);
-    when None, executor-local ``localCheckpoint`` (local mode).
 
     Truncation cadence: measured at sf0.1 (local[32]), per-round
     eager truncation BEATS batching rounds into one lazy
@@ -46,30 +35,20 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     each lazy round stacks two joins plus a nested scalar aggregate
     feeding a broadcast, and Catalyst re-optimizes the whole stack
     at every action, swamping the per-job scheduling it saves. So:
-    one checkpointed job per round, plan depth constant."""
+    one pinned job per round, plan depth constant."""
     check_every = 5
-    truncate_every = 1
-    sc = edges.sparkSession.sparkContext
-    if checkpoint_dir is not None:
-        sc.setCheckpointDir(checkpoint_dir)
-
-    def cp(df: DataFrame, eager: bool = True) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=eager)
-        return df.localCheckpoint(eager=eager)
-
-    e = cp(edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-           .distinct())
-    verts = cp(e.select(F.col("s").alias("id"))
-               .unionByName(e.select(F.col("d").alias("id")))
-               .distinct())
+    e = pin(edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+            .distinct(), "pagerank.edges")
+    verts = pin(e.select(F.col("s").alias("id"))
+                .unionByName(e.select(F.col("d").alias("id")))
+                .distinct(), "pagerank.vertices")
     n = verts.count()
     out_deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     # out-degree is static: fold it into the edge list ONCE so every
     # round costs a single (ranks ⋈ weighted-edges) join instead of
     # rank ⋈ edges ⋈ deg — max_iterations joins saved, identical
     # arithmetic (same pattern as queries/tier20.pagerank_exact)
-    ew = cp(e.join(out_deg, "s"))
+    ew = pin(e.join(out_deg, "s"), "pagerank.weighted_edges")
     ranks = verts.withColumn("rank", F.lit(1.0 / n))
 
     for i in range(max_iterations):
@@ -88,23 +67,19 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                     + damping * F.coalesce(F.col("inflow"), F.lit(0.0)))
         # ranks (id + rank) is the vertex frame — joining inflow onto
         # it both updates the rank and carries the previous value for
-        # the fused convergence check
+        # the convergence probe
         stepped = (ranks.join(inflow, "id", "left")
                    .crossJoin(F.broadcast(tot))
                    .select("id", new_rank.alias("_new"),
                            F.col("rank").alias("_prev"))
                    .withColumnRenamed("_new", "rank"))
-        if (i + 1) % check_every == 0 or i == max_iterations - 1:
-            # lazy checkpoint: the delta aggregate is the action that
-            # materializes this round — one job for update + probe
-            ck = cp(stepped, eager=False)
+        probe = (i + 1) % check_every == 0 or i == max_iterations - 1
+        ck = pin(stepped if probe else stepped.select("id", "rank"),
+                 f"pagerank.round{i + 1}")
+        ranks = ck.select("id", "rank")
+        if probe:
             delta = ck.agg(
                 F.max(F.abs(F.col("rank") - F.col("_prev")))).first()[0]
-            ranks = ck.select("id", "rank")
             if delta is not None and delta < tol:
                 break
-        elif (i + 1) % truncate_every == 0:
-            ranks = cp(stepped.select("id", "rank"))
-        else:
-            ranks = stepped.select("id", "rank")
-    return ranks.select("id", "rank")
+    return ranks

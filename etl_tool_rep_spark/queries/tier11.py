@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from ..operators.rank import grouped_prefix_sum
 from .registry import query
 
@@ -91,7 +92,7 @@ def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("doc_id",
                       F.col("n_tok").cast("bigint").alias("n_tok"),
                       nw.cast("bigint").alias("new_words"))
-              .localCheckpoint(eager=False))
+              .transform(pin, "vocab_growth.joined"))
     t = grouped_prefix_sum(joined, [], [F.asc("doc_id")],
                            lead="doc_id",
                            sums={"_cv": "new_words", "_ct": "n_tok"})

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.dedup import normalize_text, word_shingles
+from ..operators.pin import pin
 from .registry import query
 
 
@@ -121,7 +122,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffles. Weighting by c keeps occurrence semantics identical.
     g2 = (tri.groupBy("g", "doc_id")
           .agg(F.count(F.lit(1)).alias("c"))
-          .localCheckpoint(eager=False))
+          .transform(pin, "ngram_novelty.grams"))
     firsts = g2.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"),
                    F.col("c")).otherwise(0)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.dedup import normalize_text, word_shingles
+from ..operators.pin import pin
 from ..operators.skew import salted_agg_count, salted_join
 from .registry import query
 
@@ -309,13 +310,15 @@ def bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         top = (pr.orderBy(F.col("c").desc(), F.col("a").asc(),
                           F.col("b").asc())
                  .limit(1)
-                 .localCheckpoint(eager=True))  # one 3-col row/round
+                 .transform(pin, f"bpe_merge_train.top{k}"))  # 1 row
         tops.append(top.select(
             F.lit(k).cast("int").alias("merge_round"),
             F.col("a").alias("left_sym"),
             F.col("b").alias("right_sym"),
             F.concat(F.col("a"), F.col("b")).alias("merged"),
             F.col("c").alias("pair_count")))
+        if k == 3:
+            break  # the last merge's rewrite has no consumer
         padded = F.concat(F.lit(" "),
                           F.replace(F.col("seq"), F.lit(" "),
                                     F.lit("  ")),
@@ -327,8 +330,9 @@ def bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select(F.trim(F.replace(F.replace(padded, pat, rep),
                                        F.lit("  "), F.lit(" ")))
                        .alias("seq"), "cnt")
-              .localCheckpoint(eager=False))  # rounds chain: keep the
-        # plan tree flat instead of nesting 3 rewrites deep
+              .transform(pin, f"bpe_merge_train.vocab{k}"))
+        # rounds chain: keep the plan tree flat instead of nesting 3
+        # rewrites deep
     out = tops[0]
     for t in tops[1:]:
         out = out.unionByName(t)
@@ -399,7 +403,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                    slice(split(seq, ' '), 2, size(split(seq, ' ')) - 1))
     """)
     enc = dwords.select("w").distinct().withColumn("seq", seq0)
-    for _ in (1, 2, 3):
+    for k in (1, 2, 3):
         pr = (v.select("cnt", F.explode(pairs_expr).alias("p"))
                .groupBy(F.col("p").getField("0").alias("a"),
                         F.col("p").getField("1").alias("b"))
@@ -407,7 +411,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         top = (pr.orderBy(F.col("c").desc(), F.col("a").asc(),
                           F.col("b").asc())
                  .limit(1).select("a", "b")
-                 .localCheckpoint(eager=True))
+                 .transform(pin, f"bpe_encode.top{k}"))
 
         def _rewrite(frame):
             padded = F.concat(F.lit(" "),
@@ -424,8 +428,9 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             return (frame.crossJoin(F.broadcast(top))
                          .select(*keep, rewritten.alias("seq")))
 
-        v = _rewrite(v).localCheckpoint(eager=False)
-        enc = _rewrite(enc).localCheckpoint(eager=False)
+        enc = pin(_rewrite(enc), f"bpe_encode.encoding{k}")
+        if k < 3:  # the last merge's vocab rewrite has no consumer
+            v = pin(_rewrite(v), f"bpe_encode.vocab{k}")
     return (dwords.join(enc, "w")
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_words"),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from ..operators.rank import grouped_prefix_sum
 from .registry import query
 
@@ -166,7 +167,7 @@ def ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("value", "n1", "n2",
                     F.abs(F.col("c1") * F.col("n2")
                           - F.col("c2") * F.col("n1")).alias("gap"))
-         .localCheckpoint(eager=False))
+         .transform(pin, "ks_test.gaps"))
     mx = g.groupBy().agg(F.max("gap").alias("max_gap"))
     return (g.crossJoin(F.broadcast(mx))  # 1-row scalar attach
              .filter(F.col("gap") == F.col("max_gap"))

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 _HOPS = 4
@@ -91,7 +92,7 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select(F.col("x.l_suppkey").alias("a"),
                  F.col("y.l_suppkey").alias("b"))
          .distinct()
-         .localCheckpoint(eager=True))
+         .transform(pin, "bfs_distances.edges"))
     src = li.agg(F.min("l_suppkey")).first()[0]
     settled = (e.sparkSession.createDataFrame(
         [(src, 0)], schema="id long, dist int"))
@@ -101,8 +102,8 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.col("b").alias("id")).distinct()
                 .join(settled, "id", "left_anti")
                 .select("id", F.lit(k).cast("int").alias("dist"))
-                .localCheckpoint(eager=True))
-        # settled = union of per-round checkpointed frontiers: its
+                .transform(pin, f"bfs_distances.frontier{k}"))
+        # settled = union of per-round pinned frontiers: its
         # lineage is already flat, no extra checkpoint job needed
         settled = settled.unionByName(new)
         frontier = new

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.dedup import gram_set
+from ..operators.pin import pin
 from . import shared_sql
 from .registry import query
 
@@ -339,7 +340,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang",
         ((F.ascii(F.substring(F.col("wd"), 1, 1)) * 31
           + F.length(F.col("wd"))) % 64).alias("b")) \
-        .localCheckpoint(eager=False)
+        .transform(pin, "dsir_weights.features")
     stats = feats.groupBy("b").agg(
         F.count(F.lit(1)).cast("bigint").alias("rc"),
         F.count_if(F.col("lang") == "en").cast("bigint").alias("tc"))
@@ -478,7 +479,7 @@ def neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (li.select(F.col("l_suppkey").alias("s"),
                    F.col("l_partkey").alias("p"))
            .distinct()
-           .localCheckpoint(eager=False))
+           .transform(pin, "neighbor_jaccard.edges"))
     deg = e.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     # truncate before the symmetrizing union: co feeds both branches,
     # and the part-key self-join + shuffled groupBy (the expensive
@@ -486,7 +487,7 @@ def neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     co = (blocked_copair_count(e, key="p", member="s",
                                out_1="s1", out_2="s2", out_n="shared")
           .filter(F.col("shared") >= 2)
-          .localCheckpoint(eager=False))
+          .transform(pin, "neighbor_jaccard.copairs"))
     sym = (co.select(F.col("s1").alias("src"), F.col("s2").alias("dst"),
                      "shared")
              .unionAll(co.select(F.col("s2").alias("src"),

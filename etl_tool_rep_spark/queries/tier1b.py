@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from ..operators.rank import grouped_row_number
 from .registry import query
 
@@ -369,7 +370,7 @@ def string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
               # r14 census pin: vocabulary-sized, consumed by pieces,
               # probes AND the identity arm of dmap under different
               # projections (3 part scans in the before-plan)
-              .localCheckpoint(eager=False))
+              .transform(pin, "string_distance.names"))
 
     # even partition: piece i of an l-char string starts (1-based) at
     # 1 + i*(l div NP) + min(i, l mod NP), length (l div NP) + [i < l mod NP]
@@ -423,7 +424,7 @@ def string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # matching cost and the dmap union consumes it TWICE
     verified = (cand.select("_na", "_nb", d.alias("_d"))
                 .filter(F.col("_d") >= 0)
-                .localCheckpoint(eager=False))
+                .transform(pin, "string_distance.verified"))
     # directed map: both orientations plus exact-name self pairs
     dmap = (verified
             .union(verified.select(F.col("_nb"), F.col("_na"), "_d"))

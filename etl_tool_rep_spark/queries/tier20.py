@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import dedup as D
+from ..operators.pin import pin
 from . import shared_sql
 from .registry import query
 
@@ -78,26 +79,24 @@ def dedup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pair graph is orders of magnitude smaller than the
     corpus (near-dup candidates only); each round is one
     (edges join labels) shuffle + a min-aggregate, lineage-truncated
-    per round like operators/graph.py. At 100 TB swap
-    localCheckpoint for reliable checkpoint (cluster durability),
-    exactly as pagerank does behind its flag.
+    per round like operators/graph.py.
     """
     docs = load(spark, sf_dir, "documents")
     # truncate the pair pipeline's lineage BEFORE the symmetrizing
     # union: pairs feeds both union branches, and without this the
     # gram self-join + jaccard filter (the dominant cost) would run
-    # twice when the eager edge checkpoint materializes
+    # twice when the edge pin materializes
     pairs = (D.ngram_jaccard_pairs(docs, min_jaccard=0.05)
               .select("id_1", "id_2")
-              .localCheckpoint(eager=False))
+              .transform(pin, "dedup_components_exact.pairs"))
     edges = (pairs.select(F.col("id_1").alias("a"),
                           F.col("id_2").alias("b"))
              .unionByName(pairs.select(F.col("id_2").alias("a"),
                                        F.col("id_1").alias("b")))
-             .localCheckpoint(eager=True))
+             .transform(pin, "dedup_components_exact.edges"))
     lbl = (edges.select(F.col("a").alias("id")).distinct()
            .select("id", F.col("id").alias("lbl")))
-    for _ in range(_COMP_HOPS):
+    for i in range(_COMP_HOPS):
         nb_min = (edges.join(lbl.select(F.col("id").alias("a"),
                                         F.col("lbl").alias("_nl")), "a")
                   .groupBy(F.col("b").alias("id"))
@@ -107,7 +106,7 @@ def dedup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      F.coalesce(F.col("_m"),
                                                 F.col("lbl")))
                         .alias("lbl"))
-               .localCheckpoint(eager=True))
+               .transform(pin, f"dedup_components_exact.round{i + 1}"))
     return lbl.select(F.col("id").cast("bigint").alias("doc_id"),
                       F.col("lbl").cast("bigint").alias("component"))
 
@@ -151,7 +150,7 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     uh = (e.select(F.date_trunc("hour", F.col("ts")).alias("h"),
                    "user_id")
            .distinct()
-           .localCheckpoint(eager=False))
+           .transform(pin, "rolling_active_users.user_hours"))
     hours = uh.select("h").distinct()
     expanded = (uh.withColumn("k", F.explode(F.sequence(F.lit(0),
                                                         F.lit(23))))
@@ -242,8 +241,8 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round, one (ranks ⋈ deg ⋈ edges) shuffle keyed by the
     source node and one integer sum keyed by the target — the same
     volume profile as operators/graph.pagerank; lineage is truncated
-    per round (reliable checkpoint on a real cluster). N arrives as
-    a broadcast 1-row aggregate, never a driver action.
+    per round by a pin. N arrives as a broadcast 1-row aggregate,
+    never a driver action.
     """
     # pre-distinct (order, supplier) BEFORE the self-join — same
     # m^2-fan-out guard kcore_decomposition gained in r12 (a supplier
@@ -267,8 +266,8 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges_w = (edges.join(deg, "a")
                     .select(F.col("a").alias("_ea"),
                             F.col("b").alias("_eb"), "d")
-                    .localCheckpoint(eager=True))
-    nodes = deg.select(F.col("a").alias("id")).localCheckpoint(eager=True)
+                    .transform(pin, "pagerank_exact.edges"))
+    nodes = pin(deg.select(F.col("a").alias("id")), "pagerank_exact.nodes")
     nn = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
     # r13 (guide §2.4): the vertex count rides the rank frame as a
     # constant column instead of a per-round crossJoin(broadcast(nn))
@@ -284,7 +283,7 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                       (F.floor(F.lit(1.0) / F.col("_n") * F.lit(1e12)
                                + F.lit(0.5)) / F.lit(1e12)).alias("r"),
                       "_n"))
-    for _ in range(_PR_ITERS):
+    for i in range(_PR_ITERS):
         c = (r.join(edges_w, F.col("id") == F.col("_ea"))
               .select(F.col("_eb").alias("id"),
                       F.floor(F.col("r") / F.col("d") * F.lit(1e12)
@@ -299,7 +298,7 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                                * F.lit(1e12) + F.lit(0.5))
                        / F.lit(1e12)).alias("r"),
                       "_n")
-              .localCheckpoint(eager=True))
+              .transform(pin, f"pagerank_exact.round{i + 1}"))
     return r.select(F.col("id").cast("bigint").alias("id"),
                     F.col("r").alias("pr"))
 
@@ -366,11 +365,9 @@ def bellman_ford_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side: classic iterative relaxation — each round joins the
     current distance frame to the weighted edge list and takes the
-    elementwise min. Lineage truncated per round (localCheckpoint
-    locally; reliable checkpoint on a cluster — operators/graph.py
-    discussion applies). Unreachable-within-{rounds} nodes carry the
-    INF sentinel internally and are filtered at the end on BOTH
-    engines.
+    elementwise min. Lineage truncated per round by a pin.
+    Unreachable-within-{rounds} nodes carry the INF sentinel
+    internally and are filtered at the end on BOTH engines.
 
     Scale: per round one shuffle keyed by edge target + one min
     aggregate — identical volume profile to pagerank_exact; the
@@ -392,14 +389,14 @@ def bellman_ford_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("y.l_suppkey").alias("b"))
                .agg(F.countDistinct("x.l_orderkey").cast("bigint")
                      .alias("w"))
-               .localCheckpoint(eager=True))
+               .transform(pin, "bellman_ford_exact.edges"))
     src = li.agg(F.min("l_suppkey").cast("bigint").alias("s")) \
             .collect()[0]["s"]
     d = (wedges.select(F.col("a").alias("id")).distinct()
          .select("id",
                  F.when(F.col("id") == src, F.lit(0).cast("bigint"))
                   .otherwise(F.lit(_BF_INF).cast("bigint")).alias("d")))
-    for _ in range(_BF_ROUNDS):
+    for i in range(_BF_ROUNDS):
         relaxed = (d.filter(F.col("d") < _BF_INF)
                     .join(wedges, F.col("id") == F.col("a"))
                     .select(F.col("b").alias("id"),
@@ -412,7 +409,7 @@ def bellman_ford_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                                               F.lit(_BF_INF)
                                               .cast("bigint")))
                        .alias("d"))
-              .localCheckpoint(eager=True))
+              .transform(pin, f"bellman_ford_exact.round{i + 1}"))
     return (d.filter(F.col("d") < _BF_INF)
              .select("id", F.col("d").alias("dist")))
 

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 _P = 1_000_000_007      # Karp-Rabin modulus (matches operators/text)
@@ -197,7 +198,7 @@ def minhash_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BENCH_r12_note pattern)
     sh = (_with_shingles(load(spark, sf_dir, "documents"))
           .select("doc_id", "_sh")
-          .localCheckpoint(eager=False))
+          .transform(pin, "minhash_lsh_exact.shingles"))
     def _perm_min(a: int, b: int):
         # one-arg lambda via closure: PySpark maps the Python arity
         # onto the HOF arity, so default-arg tricks break analysis
@@ -221,7 +222,7 @@ def minhash_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("doc_id",
                         F.posexplode(F.array(*bkeys))
                          .alias("band", "bkey"))
-                .localCheckpoint(eager=False))
+                .transform(pin, "minhash_lsh_exact.bands"))
     cand = (banded.alias("a")
             .join(banded.alias("b"), ["band", "bkey"])
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -622,7 +623,7 @@ def hyperplane_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " cast(0 as bigint), (a, b) -> a + b)")
     sigs = (base.select("vec_id", "qv", sig_col.alias("sig"),
                         n2.alias("n2"))
-                .localCheckpoint(eager=True))
+                .transform(pin, "hyperplane_lsh_exact.signatures"))
     bands = sigs.select(
         "vec_id",
         F.posexplode(F.array(*[

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 
@@ -125,7 +126,7 @@ def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             " transform(sequence(1, size(ws) - 2), "
             "  i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1])) "
             "ELSE array() END")).alias("t")).distinct() \
-        .localCheckpoint(eager=False)
+        .transform(pin, "prefix_filter_jaccard.shingles")
     sz = sh.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"))
     freq = sh.groupBy("t").agg(

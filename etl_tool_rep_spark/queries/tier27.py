@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 
@@ -560,7 +561,7 @@ def blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = (prefix_filter_jaccard(spark, sf_dir)
              .select(F.col("a_id").alias("a"),
                      F.col("b_id").alias("b"))
-             .localCheckpoint(eager=False))
+             .transform(pin, "blocking_recall.truth"))
     docs = load(spark, sf_dir, "documents")
     d = docs.select("doc_id", "lang", "n_chars")
     w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")

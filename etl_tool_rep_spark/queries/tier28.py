@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 # quantized natural log of a positive BIGINT, on a 1e-6 grid —
@@ -480,10 +481,10 @@ def doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(F.expr(
             "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"))
-        .alias("w")).localCheckpoint(eager=False)
+        .alias("w")).transform(pin, "doc_perplexity.tokens")
     freq = (toks.groupBy("w").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False))
+        .transform(pin, "doc_perplexity.freq"))
     corpus = freq.agg(F.sum("cnt").cast("bigint").alias("t"),
                       F.count(F.lit(1)).cast("bigint").alias("v"))
     scored = (toks.join(freq, "w")

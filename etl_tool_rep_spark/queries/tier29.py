@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 _KCORE_K = 3
@@ -115,8 +116,8 @@ def kcore_decomposition(spark: SparkSession,
     is a semi-join of the edge list against the surviving node set
     followed by a map-side-combinable degree count. Rounds are a
     fixed constant; on a cluster each round's frontier shrinks
-    monotonically, and `localCheckpoint` truncates the plan exactly
-    like the other iterative operators in `operators/graph.py`.
+    monotonically, and a pin truncates the plan exactly like the
+    other iterative operators in `operators/graph.py`.
     """
     # pre-distinct (order, supplier) BEFORE the self-join: a supplier
     # appearing on m lines of one order would otherwise fan the join
@@ -132,7 +133,7 @@ def kcore_decomposition(spark: SparkSession,
              .select(F.col("x.l_suppkey").alias("a"),
                      F.col("y.l_suppkey").alias("b"))
              .distinct()
-             .localCheckpoint())
+             .transform(pin, "kcore_decomposition.edges"))
     deg0 = edges.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree0"))
     # r13 DELTA PEEL — the same restructure the DuckDB oracle got in
@@ -151,7 +152,8 @@ def kcore_decomposition(spark: SparkSession,
     drops = []
     for r in range(1, _KCORE_ROUNDS + 1):
         dropped = (cur.filter(F.col("deg") < _KCORE_K)
-                   .select("node").localCheckpoint())
+                   .select("node")
+                   .transform(pin, f"kcore_decomposition.dropped{r}"))
         drops.append(dropped.withColumn(
             "peel_round", F.lit(r).cast("bigint")))
         dec = (edges.join(dropped.withColumnRenamed("node", "b"), "b")
@@ -163,7 +165,7 @@ def kcore_decomposition(spark: SparkSession,
                        (F.col("deg")
                         - F.coalesce(F.col("_dec"), F.lit(0)))
                        .alias("deg"))
-               .localCheckpoint())
+               .transform(pin, f"kcore_decomposition.degrees{r}"))
     peeled = drops[0]
     for d in drops[1:]:
         peeled = peeled.unionByName(d)
@@ -236,11 +238,12 @@ def attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select(F.col("event_id").alias("tid"), "user_id",
                      F.col("ts").alias("tts"),
                      F.col("event_type").alias("channel")))
-    paths = (conv.join(touch,
-                       (conv.user_id == touch.user_id)
-                       & (F.col("tts") <= F.col("cts"))
-                       & (F.col("tts") > F.col("cts")
-                          - F.expr("INTERVAL 7 DAY")))
+    c, t = conv.alias("c"), touch.alias("t")
+    paths = (c.join(t,
+                    (F.col("c.user_id") == F.col("t.user_id"))
+                    & (F.col("tts") <= F.col("cts"))
+                    & (F.col("tts") > F.col("cts")
+                       - F.expr("INTERVAL 7 DAY")))
              .select("pid", "tid", "channel", F.col("tts").alias("ts")))
     wp = Window.partitionBy("pid")
     scored = (paths
@@ -363,7 +366,7 @@ def conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             # join + per-group rank window) was re-planned by BOTH the
             # test aggregate and the final attach join — 5 orders
             # scans in the before-plan
-            .localCheckpoint(eager=False))
+            .transform(pin, "conformal_interval.qhat"))
     test = (base.filter(~F.col("is_cal"))
             .join(F.broadcast(qhat), "prio")
             .groupBy("prio")

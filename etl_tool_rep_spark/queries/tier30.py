@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from ..operators.rank import global_row_number, grouped_prefix_sum
 from .registry import query
 
@@ -218,7 +219,7 @@ def decision_stump_train(spark: SparkSession,
         # whole bucketed two-phase rank (global_row_number's internal
         # frame is planned twice: offsets + join) — pinning here cuts
         # the before-plan's 6 orders scans to 3
-        .localCheckpoint(eager=False))
+        .transform(pin, "decision_stump_train.thresholds"))
     split = (F.broadcast(cand.crossJoin(stats))
              .join(lab, F.lit(True))
              .groupBy("thr", "pos", "n")
@@ -337,7 +338,7 @@ def naive_bayes_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang",
         F.explode(F.expr(
             "filter(split(lower(text), '[^a-z]+'), x -> x <> '')"))
-        .alias("w")).localCheckpoint(eager=False)
+        .alias("w")).transform(pin, "naive_bayes_score.tokens")
     cls = toks.groupBy(F.col("lang").alias("c")).agg(
         F.countDistinct("doc_id").cast("bigint").alias("n_docs"))
     prior = cls.withColumn(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 _PCA_ROUNDS = 6
@@ -144,23 +145,23 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(F.col("a.xq") * F.col("b.xq")).alias("pg"))
             .groupBy("i", "j")
             .agg(F.sum(F.col("pg").cast("decimal(38,0)")).alias("g"))
-            .localCheckpoint())
+            .transform(pin, "pca_top_component.gram"))
     v = gram.select("i").distinct().select(
         F.col("i").alias("j"),
         F.lit(1000000).cast("bigint").alias("vq"))
-    for _ in range(_PCA_ROUNDS):
+    for i in range(_PCA_ROUNDS):
         # pin u: it feeds both the max and the rescale; d-sized
         # frame, and the recompute would re-run the gram join
         u = (gram.join(F.broadcast(v), "j")
              .groupBy("i")
              .agg(F.sum(F.col("g") * F.col("vq")).alias("u"))
-             .localCheckpoint(eager=False))
+             .transform(pin, f"pca_top_component.u{i + 1}"))
         mx = u.agg(F.max(F.abs(F.col("u"))).alias("m"))
         v = (u.crossJoin(F.broadcast(mx))
              .select(F.col("i").alias("j"),
                      F.expr("CAST(u * 1000000 DIV m AS BIGINT)")
                      .alias("vq"))
-             .localCheckpoint())
+             .transform(pin, f"pca_top_component.v{i + 1}"))
     num = (gram
            .join(F.broadcast(v.select(F.col("j").alias("i"),
                                       F.col("vq").alias("va"))), "i")
@@ -238,15 +239,15 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable sum — two shuffles per round over the distinct edge
     list, score vectors are node-sized. The edge build is one
     DISTINCT over a 2-column projection. At 100 TB: identical plan,
-    localCheckpoint -> reliable checkpoint, AQE handles hub skew.
+    AQE handles hub skew.
     """
     li = load(spark, sf_dir, "lineitem")
     edges = (li.select(F.col("l_suppkey").alias("s"),
                        F.col("l_partkey").alias("p"))
-             .distinct().localCheckpoint())
+             .distinct().transform(pin, "hits_scores.edges"))
     h = edges.select("s").distinct().withColumn(
         "hq", F.lit(1000000).cast("bigint"))
-    for _ in range(_HITS_ROUNDS):
+    for i in range(_HITS_ROUNDS):
         ar = (edges.join(h, "s")
               .groupBy("p")
               .agg(F.sum(F.col("hq").cast("decimal(38,0)"))
@@ -263,7 +264,7 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         h = (hr.crossJoin(F.broadcast(hmx))
              .select("s", F.expr("CAST(t * 1000000 DIV m AS BIGINT)")
                      .alias("hq"))
-             .localCheckpoint())
+             .transform(pin, f"hits_scores.hubs{i + 1}"))
     deg = edges.groupBy("s").agg(
         F.count(F.lit(1)).cast("bigint").alias("out_degree"))
     return (h.join(deg, "s")
@@ -343,7 +344,8 @@ def perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.datediff(F.col("o_orderdate").cast("date"), epoch) % 7)
         .cast("bigint").alias("x2"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(-1)
-        .cast("bigint").alias("y")).localCheckpoint()
+        .cast("bigint").alias("y")) \
+        .transform(pin, "perceptron_train.features")
     # range(1)-rooted weights: createDataFrame would plant an opaque
     # LogicalRDD at the root of every epoch's weight frame; Range(1)
     # gives the explain-audit propagator a STRUCTURAL 1-row bound that

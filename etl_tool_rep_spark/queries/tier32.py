@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -121,7 +122,7 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
                f" / {_CELL}) AS BIGINT)").alias("gy"))
     cells = (pts.groupBy("gx", "gy")
              .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-             .localCheckpoint())
+             .transform(pin, "grid_dbscan.cells"))
     offs = spark.createDataFrame(
         [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)],
         "dx long, dy long")
@@ -136,7 +137,7 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     core = (dens.filter(F.col("nbr_cnt") >= _MINPTS)
             .withColumn("key", (F.col("gx") + 50000) * 100000
                         + (F.col("gy") + 50000))
-            .localCheckpoint())
+            .transform(pin, "grid_dbscan.core"))
     cb = core.select(F.col("gx").alias("bgx"),
                      F.col("gy").alias("bgy"),
                      F.col("key").alias("bkey"))
@@ -144,9 +145,9 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
            .join(cb, (F.col("bgx") == F.col("gx") + F.col("dx"))
                  & (F.col("bgy") == F.col("gy") + F.col("dy")))
            .select(F.col("key").alias("akey"), "bkey")
-           .localCheckpoint())
+           .transform(pin, "grid_dbscan.adjacency"))
     lab = core.select("key", F.col("key").alias("lab"))
-    for _ in range(_DBSCAN_ROUNDS):
+    for i in range(_DBSCAN_ROUNDS):
         nl = lab.select(F.col("key").alias("bkey"),
                         F.col("lab").alias("nlab"))
         lab = (lab.join(adj, lab.key == adj.akey)
@@ -154,7 +155,7 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
                .groupBy("key", "lab")
                .agg(F.min("nlab").alias("mn"))
                .select("key", F.least("lab", "mn").alias("lab"))
-               .localCheckpoint())
+               .transform(pin, f"grid_dbscan.round{i + 1}"))
     return (core.join(lab, "key")
             .select("gx", "gy", "cnt", "nbr_cnt",
                     F.col("lab").cast("bigint").alias("cluster")))
@@ -425,7 +426,7 @@ def stump_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
             # was re-planned by THREE consumers (mx, best, rule) — 10
             # orders scans in the before-plan. Different projections
             # per consumer => the r13 pin heuristic applies.
-            .localCheckpoint(eager=False))
+            .transform(pin, "stump_cv.gains"))
     mx = (gain.groupBy("f").agg(F.max("gain_q").alias("gmax"))
           .withColumnRenamed("f", "mf"))
     best = (gain.join(mx, (F.col("f") == F.col("mf"))

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from ..operators.rank import global_row_number, grouped_row_number
 from .registry import query
 
@@ -114,7 +115,7 @@ def maximal_independent_set(spark: SparkSession,
                     & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
              .select(F.col("x.l_suppkey").alias("a"),
                      F.col("y.l_suppkey").alias("b"))
-             .distinct().localCheckpoint())
+             .distinct().transform(pin, "maximal_independent_set.edges"))
     nodes = edges.select(F.col("a").alias("node")).distinct()
     und = nodes.withColumn(
         "pri", F.expr("(node * 2654435761) % 2147483648"
@@ -130,14 +131,15 @@ def maximal_independent_set(spark: SparkSession,
         mis = (und.join(nbr, "node", "left")
                .filter(F.col("minp").isNull()
                        | (F.col("pri") < F.col("minp")))
-               .select("node").localCheckpoint())
+               .select("node")
+               .transform(pin, f"maximal_independent_set.mis{r}"))
         mis_parts.append(mis.withColumn(
             "mis_round", F.lit(r).cast("bigint")))
         rem = (edges.join(mis.withColumnRenamed("node", "a"), "a")
                .select(F.col("b").alias("node")).distinct())
         und = (und.join(mis, "node", "left_anti")
                .join(rem, "node", "left_anti")
-               .localCheckpoint())
+               .transform(pin, f"maximal_independent_set.undecided{r}"))
     mis_all = mis_parts[0]
     for p in mis_parts[1:]:
         mis_all = mis_all.unionAll(p)
@@ -208,7 +210,7 @@ def quantile_normalization(spark: SparkSession,
         .cast("bigint").alias("cents"))
     # r13 pin: vals feeds the group census, both rank engines and the
     # scalar attach — four re-scans of orders unpinned
-    vals = vals.localCheckpoint(eager=False)
+    vals = pin(vals, "quantile_normalization.values")
     ngs = vals.groupBy("prio").agg(
         F.count(F.lit(1)).cast("bigint").alias("ng"))
     grp = (grouped_row_number(vals, ["prio"],
@@ -300,7 +302,7 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (4 documents scans in the r13-open plan) without the pin
     bc = (big.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=False))
+        .transform(pin, "kneser_ney_bigram.bigrams"))
     c1 = bc.groupBy("w1").agg(
         F.sum("c").cast("bigint").alias("ctot"),
         F.count(F.lit(1)).cast("bigint").alias("ntypes"))
@@ -387,7 +389,7 @@ def topic_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # r13 pin: toks feeds the df census and BOTH sides of the
         # co-occurrence join — tokenize+distinct ran 3x unpinned
-        .localCheckpoint(eager=False))
+        .transform(pin, "topic_coherence.tokens"))
     freq = toks.groupBy("lang", "w").agg(
         F.count(F.lit(1)).cast("bigint").alias("df"))
     top = freq.withColumn("rk", F.row_number().over(

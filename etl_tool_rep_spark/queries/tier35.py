@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -256,7 +257,7 @@ def changepoint_detect(spark: SparkSession,
              # r14 census pin: |prio| x |days| rows, but the daily
              # census + three windows above were re-planned by THREE
              # consumers (mx, best, detail) — the stump_cv pattern
-             .localCheckpoint(eager=False))
+             .transform(pin, "changepoint_detect.gains"))
     mx = (gains.groupBy("prio").agg(F.max("gain_q").alias("gmax"))
           .withColumnRenamed("prio", "mprio"))
     best = (gains.join(F.broadcast(mx),

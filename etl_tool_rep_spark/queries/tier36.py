@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from ..operators.rank import global_row_number, grouped_prefix_sum
 from .registry import query
 
@@ -124,7 +125,7 @@ def negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = docs.select(
         "doc_id", "lang",
         F.expr("(doc_id * 2654435761) % 2147483648").alias("h")) \
-        .localCheckpoint(eager=False)
+        .transform(pin, "negative_sampling.docs")
     anchors = (d2.filter(F.col("doc_id") % 50 == 0)
                .select(F.col("doc_id").alias("anchor_id"),
                        "lang", "h"))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 _LNQ = ("CAST(FLOOR(LN(CAST({v} AS DOUBLE)) * 1000000.0 + 0.5)"
@@ -116,14 +117,14 @@ def markov_stationary_exact(spark: SparkSession,
           .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
           .withColumn("rt", F.sum("c").over(
               Window.partitionBy("src")).cast("bigint"))
-          .localCheckpoint())
+          .transform(pin, "markov_stationary_exact.transitions"))
     states = tm.select(F.col("src").alias("state")).distinct()
     nst = states.agg(F.count(F.lit(1)).alias("ns"))
     pi = (states.crossJoin(F.broadcast(nst))
           .select("state",
                   F.expr("CAST(1000000 DIV ns AS BIGINT)")
                   .alias("mass")))
-    for _ in range(_MARKOV_ROUNDS):
+    for i in range(_MARKOV_ROUNDS):
         m = (pi.join(tm, pi.state == tm.src)
              .groupBy("dst")
              .agg(F.sum(F.expr("mass * c DIV rt")).cast("bigint")
@@ -133,7 +134,7 @@ def markov_stationary_exact(spark: SparkSession,
               .select(F.col("dst").alias("state"),
                       F.expr("CAST(raw * 1000000 DIV t AS BIGINT)")
                       .alias("mass"))
-              .localCheckpoint())
+              .transform(pin, f"markov_stationary_exact.round{i + 1}"))
     hrate = (pi.join(tm, pi.state == tm.src)
              .agg(F.sum(F.expr(
                  f"mass * c * ({_LNQ.format(v='rt')}"

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 # integer cents from the events value column (shared with tier2)
@@ -472,8 +473,8 @@ def cohort_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 census pin: the distinct (user, type) frame feeds the size
     # census AND both self-join sides (4 events scans + 3 distinct
     # recomputes in the before-plan)
-    e = (ev.select("user_id", "event_type").distinct()
-         .localCheckpoint(eager=False))
+    e = pin(ev.select("user_id", "event_type").distinct(),
+            "cohort_overlap.user_types")
     sz = (e.groupBy("event_type")
           .agg(F.count(F.lit(1)).cast("bigint").alias("n")))
     a = e.alias("a")
@@ -631,7 +632,7 @@ def triple_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
                .groupBy("o").agg(F.collect_set("i").alias("_s0"))
                .filter(F.size("_s0") <= _TB_CAP)
                .select(F.array_sort("_s0").alias("_s"))
-               .localCheckpoint(eager=False))
+               .transform(pin, "triple_basket.baskets"))
     triples_expr = F.expr("""
         flatten(transform(_s, x ->
           flatten(transform(filter(_s, y -> y > x), y ->

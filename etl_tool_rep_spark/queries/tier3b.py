@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from .registry import query
 
 CHUNK, STRIDE = 120, 80
@@ -110,7 +111,7 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second tokenize (toks previously fed both censuses)
     tf = (toks.groupBy("doc_id", "token")
               .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-              .localCheckpoint(eager=False))
+              .transform(pin, "tfidf_topk.tf"))
     df = (tf.groupBy("token")
             .agg(F.count(F.lit(1)).cast("bigint").alias("df")))
     # in-plan scalar (broadcast 1-row crossJoin), not a .count() job
@@ -183,7 +184,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                     *[F.count_if(F.col("token") == t).cast("bigint")
                       .alias(f"_tf_{i}")
                       for i, t in enumerate(QUERY_TERMS)])
-               .localCheckpoint(eager=False))
+               .transform(pin, "bm25_search.per_doc"))
     # corpus stats stay in-plan: a 1-row (n_docs, avgdl) aggregate is
     # broadcast-crossJoined instead of collect()ed (mirrors the
     # oracle's CROSS JOIN stats)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.pin import pin
 from ..operators.rank import global_row_number
 from ..sinks.lakehouse import LakeTable
 from .registry import query
@@ -112,7 +113,7 @@ def incremental_minhash_dedup(spark: SparkSession,
     per-source frame is dimension-sized (<= |sources| rows), the
     only driver materialization."""
     docs = load(spark, sf_dir, "documents")
-    sh = _with_shingles(docs).localCheckpoint(eager=True)
+    sh = pin(_with_shingles(docs), "incremental_minhash_dedup.shingles")
 
     def _perm_min(a: int, b: int):
         return F.array_min(F.transform(

@@ -224,12 +224,13 @@ def scd2_range_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
                       "valid_to", "state_k"))
     purchases = (ev.filter(F.col("event_type") == "purchase")
                  .select("event_id", "user_id", "ts"))
-    cond = ((purchases["user_id"] == states["user_id"])
-            & (purchases["ts"] >= states["valid_from"])
-            & (states["valid_to"].isNull()
-               | (purchases["ts"] < states["valid_to"])))
-    return (purchases.join(states, cond, "inner")
-            .select("event_id", purchases["user_id"].alias("user_id"),
+    p, s = purchases.alias("p"), states.alias("s")
+    cond = ((F.col("p.user_id") == F.col("s.user_id"))
+            & (F.col("p.ts") >= F.col("s.valid_from"))
+            & (F.col("s.valid_to").isNull()
+               | (F.col("p.ts") < F.col("s.valid_to"))))
+    return (p.join(s, cond, "inner")
+            .select("event_id", F.col("p.user_id").alias("user_id"),
                     "state_k"))
 
 

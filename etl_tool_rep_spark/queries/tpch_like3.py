@@ -22,11 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from .registry import query
-
-
-def _dec(c):
-    c = F.col(c) if isinstance(c, str) else c
-    return c.cast("decimal(18,4)")
+from .tier1 import _dec
 
 
 def _REV():

@@ -1,12 +1,22 @@
 """PageRank vs numpy power iteration; heavy-hitter exactness on
 skewed synthetic data."""
 
+import json
+import os
+import subprocess
+import sys
+
 import numpy as np
 from pyspark.sql import functions as F
 
 from etl_tool_rep_spark.catalog import load
 from etl_tool_rep_spark.operators.graph import pagerank
 from etl_tool_rep_spark.operators.sketches import heavy_hitters
+
+import pin_durability_worker
+
+_WORKER = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "pin_durability_worker.py")
 
 
 def _co_supplier_edges(spark, sf_dir):
@@ -76,16 +86,26 @@ def test_heavy_hitters_exact_on_skew(spark):
 
 
 def test_pagerank_reliable_checkpoint_matches_local(spark, tmp_path):
-    """checkpoint_dir switches to cluster-durable checkpoint();
-    results must be identical to the localCheckpoint path."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (2, 1), (4, 1)], ["src", "dst"])
-    local = {r["id"]: r["rank"]
-             for r in pagerank(edges, max_iterations=20).collect()}
-    durable = {r["id"]: r["rank"]
-               for r in pagerank(
-                   edges, max_iterations=20,
-                   checkpoint_dir=str(tmp_path / "ckpt")).collect()}
-    assert local == durable
-    import os
-    assert os.listdir(tmp_path / "ckpt")  # checkpoints actually wrote
+    """A driver started with ``spark.checkpoint.dir`` pins through
+    reliable ``checkpoint()``; pagerank and connected_components must
+    give the same results as this session's local-checkpoint pins,
+    and the checkpoint files must actually be written. The durable
+    run is a separate process so the setting cannot leak into the
+    session-wide fixture."""
+    assert spark.sparkContext.getCheckpointDir() is None
+    local = pin_durability_worker.run(spark)
+    ckpt, out = tmp_path / "ckpt", tmp_path / "durable.json"
+    subprocess.run(
+        [sys.executable, _WORKER, str(ckpt), str(out)],
+        check=True, timeout=300, stdout=subprocess.DEVNULL,
+        stderr=subprocess.DEVNULL)
+    durable = json.loads(out.read_text())
+    assert str(ckpt) in durable["checkpoint_dir"]
+    assert durable["components"] == local["components"]
+    assert durable["pagerank"].keys() == local["pagerank"].keys()
+    for v, rank in local["pagerank"].items():
+        # same arithmetic; only the float summation order may differ
+        # between the two drivers' partitionings
+        assert abs(durable["pagerank"][v] - rank) < 1e-12
+    written = [f for _, _, fs in os.walk(ckpt) for f in fs]
+    assert written  # the pins really went to the checkpoint dir

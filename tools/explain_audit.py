@@ -432,7 +432,7 @@ def audit_nonequi_joins(name: str, df) -> list[str]:
       small row bound (`_row_bound` / `_attr_bounds`). New code pays
       the proof or earns an allowlist entry with a stated bound.
     * `_NESTED_LOOP_OK` queries: the allowlist permits shapes whose
-      bound is real but plan-opaque (localCheckpoint turns scalar
+      bound is real but plan-opaque (a pin turns scalar
       attaches into LogicalRDDs) — but even there, SOME side must be
       proven small, explicitly broadcast-hinted, or <=1 row. This is
       the output-cardinality sanity check that would have caught
@@ -550,7 +550,7 @@ def scan_driver_materialization(df) -> list[str]:
 # ones reuse (fast mode). This audit finds that static signature:
 # group every Exchange in the pre-execution plan by its canonicalized
 # subtree; any group of >= 2 with no ReusedExchange covering it is a
-# runtime-race candidate and must either be pinned (localCheckpoint
+# runtime-race candidate and must either be pinned (operators.pin,
 # twin of the oracle's AS MATERIALIZED) or carry an explicit
 # bounded-recompute justification below.
 

@@ -47,12 +47,13 @@ def ivf_curve(spark, em, truth, queries, nlist_mod: int) -> list[dict]:
     from pyspark.sql import functions as F
 
     from etl_tool_rep_spark.operators.knn import ivf_assign, ivf_topk
+    from etl_tool_rep_spark.operators.pin import pin
     cents = (em.filter(F.col("vec_id") % nlist_mod == 0)
                .select(F.col("vec_id").alias("centroid_id"),
                        F.col("embedding").alias("centroid_vec")))
     nlist = cents.count()
-    assigned = ivf_assign(em, cents, "vec_id", "embedding")
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pin(ivf_assign(em, cents, "vec_id", "embedding"),
+                   "ivf_curve.assigned")
     out = []
     for nprobe in (1, 2, 4, 8, 16):
         t0 = time.perf_counter()
