@@ -47,7 +47,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # out-degree is static: fold it into the edge list ONCE so every
     # round costs a single (ranks ⋈ weighted-edges) join instead of
     # rank ⋈ edges ⋈ deg — max_iterations joins saved, identical
-    # arithmetic (same pattern as queries/tier20.pagerank_exact)
+    # arithmetic
     ew = pin(e.join(out_deg, "s"), "pagerank.weighted_edges")
     ranks = verts.withColumn("rank", F.lit(1.0 / n))
 

@@ -238,12 +238,26 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero (operators/graph.pagerank keeps the general-graph handling
     for directed inputs).
 
-    Scale: per round, one (ranks ⋈ deg ⋈ edges) shuffle keyed by the
-    source node and one integer sum keyed by the target — the same
-    volume profile as operators/graph.pagerank; lineage is truncated
-    per round by a pin. N arrives as a broadcast 1-row aggregate,
-    never a driver action.
+    Scale: Spark builds the distinct edge list; the driver collects
+    it once (~16 B per edge) and runs every round in one numpy
+    kernel, so the rounds cost no Spark jobs. The contribution
+    depends only on the source, so it is quantized per node (n
+    floors per round, not |E|), then summed per target as exact
+    int64 segment sums; ranks are <= 1, so s <= in-degree * 1e12
+    stays inside int64 for any in-degree under 9.2 M. Every double
+    op is associated as in the oracle SQL (IEEE doubles, no FMA on
+    either side), and the ranks equal DuckDB's bit for bit
+    (tests/test_tier20.py compares float.hex; check_oracle's
+    9-decimal compare cannot). Precondition: the
+    distinct edge list fits in spark.driver.maxResultSize (the 1 GiB
+    default holds ~65 M edges; sf0.1 has 907,176). Past it Spark
+    aborts the collect with a SparkException before the driver
+    holds the data; operators/graph.pagerank (`pagerank`) is the
+    distributed form for graphs that large.
     """
+    import numpy as np
+    import pyarrow as pa
+
     # pre-distinct (order, supplier) BEFORE the self-join — same
     # m^2-fan-out guard kcore_decomposition gained in r12 (a supplier
     # on m lines of one order otherwise inflates the join transient
@@ -256,51 +270,25 @@ def pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                     & (F.col("x.l_suppkey") != F.col("y.l_suppkey")))
               .select(F.col("x.l_suppkey").alias("a"),
                       F.col("y.l_suppkey").alias("b"))
-              .distinct())
-    deg = edges.groupBy("a").agg(F.count(F.lit(1)).cast("bigint")
-                                  .alias("d"))
-    # fold the (static) out-degree into the edge list ONCE — each
-    # damping round then needs a single join against ranks instead of
-    # rank ⋈ deg ⋈ edges (12 joins saved across the loop; identical
-    # arithmetic, the oracle is unchanged)
-    edges_w = (edges.join(deg, "a")
-                    .select(F.col("a").alias("_ea"),
-                            F.col("b").alias("_eb"), "d")
-                    .transform(pin, "pagerank_exact.edges"))
-    nodes = pin(deg.select(F.col("a").alias("id")), "pagerank_exact.nodes")
-    nn = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
-    # r13 (guide §2.4): the vertex count rides the rank frame as a
-    # constant column instead of a per-round crossJoin(broadcast(nn))
-    # (12 broadcast jobs + 12 scalar re-aggregations saved), and the
-    # per-round `nodes LEFT JOIN s` is dropped outright: the
-    # co-supplier graph is symmetric, so every node has >= 1 in-edge
-    # and s already contains the full vertex set — the left join was
-    # a no-op re-attach (its coalesce(s, 0) could never fire). Per
-    # round: one join + one combinable sum, nothing else. Ranks are
-    # bit-identical (same quantized arithmetic, same row set).
-    r = (nodes.crossJoin(F.broadcast(nn))
-              .select("id",
-                      (F.floor(F.lit(1.0) / F.col("_n") * F.lit(1e12)
-                               + F.lit(0.5)) / F.lit(1e12)).alias("r"),
-                      "_n"))
-    for i in range(_PR_ITERS):
-        c = (r.join(edges_w, F.col("id") == F.col("_ea"))
-              .select(F.col("_eb").alias("id"),
-                      F.floor(F.col("r") / F.col("d") * F.lit(1e12)
-                              + F.lit(0.5)).cast("bigint").alias("c"),
-                      "_n"))
-        s = c.groupBy("id").agg(F.sum("c").cast("bigint").alias("s"),
-                                F.max("_n").alias("_n"))
-        r = (s.select("id",
-                      (F.floor((F.lit(1 - _PR_DAMP) / F.col("_n")
-                                + F.lit(_PR_DAMP)
-                                * (F.col("s") / F.lit(1e12)))
-                               * F.lit(1e12) + F.lit(0.5))
-                       / F.lit(1e12)).alias("r"),
-                      "_n")
-              .transform(pin, f"pagerank_exact.round{i + 1}"))
-    return r.select(F.col("id").cast("bigint").alias("id"),
-                    F.col("r").alias("pr"))
+              .distinct()
+              .toArrow())
+    ids, a = np.unique(edges.column("a").to_numpy(), return_inverse=True)
+    n = len(ids)
+    r = np.empty(0)
+    if n:
+        d = np.bincount(a)
+        # symmetric graph: after one sort by target, node k's in-edges
+        # are the d[k] consecutive entries starting at starts[k]
+        src = a[np.argsort(edges.column("b").to_numpy())]
+        starts = np.cumsum(d) - d
+        r = np.full(n, np.floor(1.0 / n * 1e12 + 0.5) / 1e12)
+        for _ in range(_PR_ITERS):
+            c = np.floor(r / d * 1e12 + 0.5).astype(np.int64)
+            s = np.add.reduceat(c[src], starts)
+            r = np.floor(((1 - _PR_DAMP) / n + _PR_DAMP * (s / 1e12))
+                         * 1e12 + 0.5) / 1e12
+    return spark.createDataFrame(pa.table({"id": ids, "pr": r}),
+                                 "id bigint, pr double")
 
 
 pagerank_exact.__doc__ = pagerank_exact.__doc__.format(

@@ -6,13 +6,23 @@
 * rolling_active_users: exact trailing-24h distinct counts on a
   hand-placed timeline, including the window boundary at exactly
   23 hours back (inclusive) and 24 hours back (excluded).
+* pagerank_exact: ranking and mass on a star graph, an edgeless
+  input and two components; bit-exact ranks against the DuckDB
+  oracle; the declared spark.driver.maxResultSize precondition.
 """
 
 import datetime
+import json
+import os
+import subprocess
+import sys
 
 import pytest
 
 from etl_tool_rep_spark.queries import QUERIES
+
+_SIZE_WORKER = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "pagerank_result_size_worker.py")
 
 
 def _t(day, hour):
@@ -86,22 +96,88 @@ def test_bpe_merge_train_hand_corpus(spark, monkeypatch):
     assert got[3] == ("ab", "ab</w>", "abab</w>", 2)
 
 
+def _pagerank_exact_on(spark, monkeypatch, orders):
+    """pagerank_exact over hand-placed orders, each a list of
+    suppliers (every pair of suppliers on one order is an edge)."""
+    import etl_tool_rep_spark.queries.tier20 as t20
+    li = spark.createDataFrame(
+        [(o, s) for o, sups in enumerate(orders) for s in sups],
+        "l_orderkey long, l_suppkey long")
+    monkeypatch.setattr(t20, "load", lambda s, d, n: li)
+    return QUERIES["pagerank_exact"](spark, "ignored")
+
+
 def test_pagerank_exact_mass_and_ranking(spark, monkeypatch):
     # star graph: hub 1 <-> spokes 2,3,4 (symmetric edges via shared
     # orders). Hub must outrank spokes; total mass stays ~1 under the
     # 1e-12 quantization (error bound: iters * n * 1e-12).
-    import etl_tool_rep_spark.queries.tier20 as t20
-    rows = []
-    for o, (a, b) in enumerate([(1, 2), (1, 3), (1, 4)]):
-        rows += [(o, a), (o, b)]
-    li = spark.createDataFrame(rows, "l_orderkey long, l_suppkey long")
-    monkeypatch.setattr(t20, "load", lambda s, d, n: li)
-    from etl_tool_rep_spark.queries import QUERIES
+    star = [[1, 2], [1, 3], [1, 4]]
     got = {r["id"]: r["pr"] for r in
-           QUERIES["pagerank_exact"](spark, "ignored").collect()}
+           _pagerank_exact_on(spark, monkeypatch, star).collect()}
     assert set(got) == {1, 2, 3, 4}
     assert got[1] > got[2] == got[3] == got[4]
     assert abs(sum(got.values()) - 1.0) < 1e-9
+
+    # no order has two suppliers: no edges, so an empty frame with
+    # the declared schema (no division by n = 0)
+    empty = _pagerank_exact_on(spark, monkeypatch, [[1], [2], [3]])
+    assert empty.schema.simpleString() == "struct<id:bigint,pr:double>"
+    assert empty.collect() == []
+
+    # the star plus a disconnected triangle: teleport spreads 1/n to
+    # every node, so each component keeps its |C|/n share of the mass
+    got = {r["id"]: r["pr"] for r in _pagerank_exact_on(
+        spark, monkeypatch, star + [[10, 11, 12]]).collect()}
+    assert set(got) == {1, 2, 3, 4, 10, 11, 12}
+    assert got[1] > got[2] == got[3] == got[4]
+    assert abs(sum(got[k] for k in (1, 2, 3, 4)) - 4 / 7) < 1e-9
+    assert abs(sum(got[k] for k in (10, 11, 12)) - 3 / 7) < 1e-9
+
+
+def test_pagerank_exact_bits_match_oracle(spark, sf_dir, monkeypatch):
+    """check_oracle compares floats at 9 decimals, which cannot see a
+    1-ulp drift; the quantized arithmetic is meant to be exact, so
+    the ranks must equal DuckDB's _PR_ORACLE bit for bit. The small
+    fixture's graph can be complete (every rank equal), so an
+    irregular hand-built graph carries the rounding cases too."""
+    import duckdb
+
+    from etl_tool_rep_spark.queries.tier20 import _PR_ORACLE
+    from tools.check_oracle import duck_connection
+
+    def bits(rows):
+        return {(int(i), float(p).hex()) for i, p in rows}
+
+    got = QUERIES["pagerank_exact"](spark, sf_dir).collect()
+    want = duck_connection(sf_dir).execute(_PR_ORACLE).fetchall()
+    assert bits(got) == bits(want) and got
+
+    orders = [[(o * 7 + k * 3) % 23 for k in range(2 + o % 4)]
+              for o in range(30)]
+    got = _pagerank_exact_on(spark, monkeypatch, orders).collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE lineitem (l_orderkey BIGINT,"
+                " l_suppkey BIGINT)")
+    con.executemany("INSERT INTO lineitem VALUES (?, ?)",
+                    [(o, s) for o, sups in enumerate(orders)
+                     for s in sups])
+    want = con.execute(_PR_ORACLE).fetchall()
+    assert bits(got) == bits(want) and len(got) == 23
+
+
+def test_pagerank_exact_result_size_precondition(tmp_path):
+    """The declared precondition: the distinct edge list must fit in
+    spark.driver.maxResultSize. A driver with a 1 MiB limit given a
+    159,600-edge graph must fail with Spark's own result-size check,
+    not hold the data. Runs in a subprocess so the shared session
+    keeps the default limit."""
+    out = tmp_path / "result.json"
+    subprocess.run([sys.executable, _SIZE_WORKER, str(out)], check=True,
+                   timeout=300, stdout=subprocess.DEVNULL,
+                   stderr=subprocess.DEVNULL)
+    res = json.loads(out.read_text())
+    assert "org.apache.spark.SparkException" in res.get("error", ""), res
+    assert "bigger than spark.driver.maxResultSize" in res["error"], res
 
 
 def test_bellman_ford_weighted_paths(spark, monkeypatch):
